@@ -51,7 +51,11 @@ possible for this mode — GDS itself does not promise one.
 Spark plan per sync superstep: edges ⋈ labels on dst (the voting neighbor) →
 ``groupBy(src, label).sum(weight)`` (map-side partial agg = the combiner) →
 ``max(struct(weight, -label))`` per src — a second partial-aggregatable agg,
-NO window sort.
+NO window sort. The sync path runs on the co-partitioned layout keyed on
+``dst``: the edge table is hash-partitioned on ``dst`` and persisted once per
+call, the state on ``node_id`` with the same N, so the voter join and the
+join back onto the state are exchange-free and only the two tallies shuffle
+(docs/SCALE_NOTES.md §35).
 """
 
 from __future__ import annotations
@@ -63,7 +67,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.plans.partitioning import shuffle_hash
+from graph_data_science_spark.operators.estimate import table_bytes
+from graph_data_science_spark.plans.partitioning import (
+    layout_partitions, repartition_edges, shuffle_hash)
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
 
 
@@ -114,19 +120,26 @@ def label_propagation(
     """``gds.labelPropagation`` analog. Returns ``(node_id, label)``."""
     if weighted and not graph.has_weight():
         raise ValueError("weighted LPA requires edges.weight")
+    if mode not in ("sync", "batch_sequential"):
+        raise ValueError(f"unknown mode {mode!r}")
     edges = (
         graph.edges.select("src", "dst", "weight")
         if weighted
         else graph.edges.select("src", "dst", F.lit(1.0).alias("weight"))
-    ).persist()
+    )
     state = _initial_state(graph, seed_property, node_weight_property)
     if mode == "sync":
-        res = _run_sync(graph, edges, state, max_iterations, checkpoint_dir, resume)
-    elif mode == "batch_sequential":
+        # co-partitioned layout keyed on the voting neighbor: edges on dst,
+        # state on node_id, same N
+        n_parts = layout_partitions(
+            graph.nodes.sparkSession, table_bytes(graph.edge_count(), edges.schema))
+        edges = repartition_edges(edges, n_parts, key="dst").persist()
+        res = _run_sync(graph, edges, state.repartition(n_parts, "node_id"),
+                        max_iterations, checkpoint_dir, resume)
+    else:
+        edges = edges.persist()
         res = _run_batch_sequential(graph, edges, state, max_iterations, batch_size,
                                     checkpoint_dir, resume)
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
     edges.unpersist()
     return res
 

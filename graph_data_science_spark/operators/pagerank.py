@@ -22,11 +22,15 @@ PageRankComputation.java:59-108), reproduced EXACTLY:
 Config defaults mirror PageRankConfig.java:41-66: dampingFactor 0.85,
 tolerance 1e-7, maxIterations 20, optional sourceNodes / weights / scaler.
 
-Spark plan per superstep: one shuffle join (edges ⋈ active senders on src —
-AQE skew-join splits hub sources) + one partial-aggregated shuffle sum on dst
-(optionally salted two-level via ``skew_salt``) + one join back onto state.
-State is persisted per superstep and lineage is broken periodically by the
-Pregel driver.
+Spark plan per superstep (PageRank/ArticleRank): the edge table is
+hash-partitioned on ``src`` into N partitions and persisted once per call
+(``plans/partitioning.repartition_edges``, N by ``layout_partitions``), and
+the vertex state is hash-partitioned on ``node_id`` into the same N. So
+``edges ⋈ active senders`` and ``state ⋈ msgs`` are exchange-free, and the
+one shuffle is the partial-aggregated message sum on dst (optionally salted
+two-level via ``skew_salt``). The Pregel driver truncates the state in
+memory each superstep and keeps its partitioner (docs/SCALE_NOTES.md §35).
+Eigenvector and the incremental warm start keep the unpartitioned plan.
 """
 
 from __future__ import annotations
@@ -36,7 +40,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, functions as F
 
 from graph_data_science_spark.graph import Graph
-from graph_data_science_spark.plans.partitioning import shuffle_hash, two_level_sum
+from graph_data_science_spark.operators.estimate import table_bytes
+from graph_data_science_spark.plans.partitioning import (
+    layout_partitions, repartition_edges, shuffle_hash, two_level_sum)
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
 from graph_data_science_spark.operators.scale_properties import apply_scaler
 
@@ -242,7 +248,10 @@ def _delta_push(
 ) -> PageRankResult:
     spark = graph.nodes.sparkSession
     alpha = 1.0 - damping_factor
-    edges = _prep_edges(graph, weighted).persist()
+    edges = _prep_edges(graph, weighted)
+    # co-partitioned layout: edges on src, state on node_id, same N
+    n_parts = layout_partitions(spark, table_bytes(graph.edge_count(), edges.schema))
+    edges = repartition_edges(edges, n_parts).persist()
 
     deg = graph.degrees("out", weighted=weighted)
     if source_nodes is not None:
@@ -259,7 +268,7 @@ def _delta_push(
         # L90: `delta > tolerance || isInitialSuperstep`); zero-delta nodes
         # would send zeros — skip them, which is message-equivalent.
         (init_rank > 0.0).cast("int").alias(ACTIVE_COL),
-    )
+    ).repartition(n_parts, "node_id")
 
     msg_val = F.col("delta") / F.col("degree")
     if weighted:

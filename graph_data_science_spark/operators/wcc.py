@@ -17,13 +17,16 @@ Config surface mirrors WccBaseConfig.java:30-46:
   seeded DisjointSetStruct layout (HugeAtomicDisjointSetStruct.java:129-146).
 - ``consecutive_ids``: remap result ids to 0..k-1 ordered by component id.
 
-Spark plan per superstep: one shuffle join (mirrored edges ⋈ changed nodes)
-+ one partial-aggregated min per dst + one join back. Only nodes whose
-component improved stay active, so the frontier shrinks every superstep —
-the relational analog of union-find's path compression converging. Lineage
-is truncated per superstep by the Pregel driver; at 10^12 edges the mirrored
-edge table is persisted once, hash-partitioned by src, and reused across all
-supersteps.
+Spark plan per superstep: mirrored edges ⋈ changed nodes, one
+partial-aggregated min per dst, one join back. Only nodes whose component
+improved stay active, so the frontier shrinks every superstep — the
+relational analog of union-find's path compression converging. The mirrored
+edge table is hash-partitioned on ``src`` into N partitions and persisted
+once per call (``plans/partitioning.repartition_edges``), and the state is
+hash-partitioned on ``node_id`` into the same N, so both joins are
+exchange-free and the min-label messages are the superstep's one shuffle.
+The Pregel driver truncates the state in memory each superstep and keeps
+its partitioner (docs/SCALE_NOTES.md §35).
 """
 
 from __future__ import annotations
@@ -33,7 +36,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, Window, functions as F
 
 from graph_data_science_spark.graph import Graph, graph_from_edges
-from graph_data_science_spark.plans.partitioning import shuffle_hash
+from graph_data_science_spark.operators.estimate import table_bytes
+from graph_data_science_spark.plans.partitioning import (
+    layout_partitions, repartition_edges, shuffle_hash)
 from graph_data_science_spark.plans.pregel import ACTIVE_COL, Pregel
 
 
@@ -72,7 +77,11 @@ def wcc(
     e = e.select("src", "dst")
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).where(F.col("src") != F.col("dst")).persist()
+    ).where(F.col("src") != F.col("dst"))
+    # co-partitioned layout: mirrored edges on src, state on node_id, same N
+    n_parts = layout_partitions(
+        spark, table_bytes(2 * graph.edge_count(), edges.schema))
+    edges = repartition_edges(edges, n_parts).persist()
 
     if seed_property is not None:
         if seed_property not in graph.nodes.columns:
@@ -89,7 +98,7 @@ def wcc(
         "node_id",
         init_comp.alias("component"),
         F.lit(1).cast("int").alias(ACTIVE_COL),
-    )
+    ).repartition(n_parts, "node_id")
 
     def step(st: DataFrame, superstep: int) -> DataFrame:
         # only nodes whose component changed last round need to re-broadcast

@@ -30,8 +30,8 @@ from pyspark.storagelevel import StorageLevel
 
 
 def strip_origin_stats(df: DataFrame) -> DataFrame:
-    """Re-wrap a checkpointed DataFrame's RDD WITHOUT the origin plan's
-    statistics.
+    """Re-wrap a checkpointed DataFrame's ``LogicalRDD`` WITHOUT the origin
+    plan's statistics, keeping its output partitioning.
 
     Since SPARK-34899 a (local)checkpoint's ``LogicalRDD`` carries the
     ORIGIN plan's computed statistics forward. In an iterative loop the
@@ -45,18 +45,26 @@ def strip_origin_stats(df: DataFrame) -> DataFrame:
     planning time on multi-million-bit BigInt arithmetic. The parquet
     scratch path never sees this (a fresh scan gets honest file-size
     stats); in-memory truncation must therefore drop the origin stats —
-    the rebuilt ``LogicalRDD`` falls back to ``defaultSizeInBytes``, which
-    is what a pre-3.2 checkpoint reported. The rebuilt plan SCANS the same
-    persisted checkpoint blocks (``toRdd`` of a checkpoint scan), so
-    storage/unpersist bookkeeping against the original checkpoint RDD is
-    unaffected."""
+    the copied ``LogicalRDD`` falls back to ``defaultSizeInBytes``, which
+    is what a pre-3.2 checkpoint reported.
+
+    The copy keeps everything else of the checkpoint's ``LogicalRDD``: the
+    same persisted checkpoint RDD (so storage/unpersist bookkeeping against
+    it is unaffected) and its ``outputPartitioning``. A state checkpointed
+    while hash-partitioned on ``node_id`` therefore stays co-partitioned
+    with the loop's edge layout, and the next superstep's joins against it
+    need no exchange (docs/SCALE_NOTES.md §35). Rebuilding from ``toRdd``
+    through ``internalCreateDataFrame`` would lose that partitioner."""
     spark = df.sparkSession
     try:
-        jrdd = df._jdf.queryExecution().toRdd()
-        jschema = spark._jvm.org.apache.spark.sql.types.DataType.fromJson(
-            df.schema.json())
-        jds = spark._jsparkSession.internalCreateDataFrame(jrdd, jschema, False)
-        return DataFrame(jds, spark)
+        jvm, jspark = spark._jvm, spark._jsparkSession
+        rel = df._jdf.queryExecution().analyzed()
+        none = jvm.scala.Option.empty()
+        rel = rel.copy(rel.output(), rel.rdd(), rel.outputPartitioning(),
+                       rel.outputOrdering(), rel.isStreaming(), rel.stream(),
+                       jspark, none, none)
+        return DataFrame(
+            jvm.org.apache.spark.sql.classic.Dataset.ofRows(jspark, rel), spark)
     except Exception:  # pragma: no cover - private-API shape changed
         return df
 

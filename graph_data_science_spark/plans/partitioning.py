@@ -13,6 +13,7 @@ that even the partial-aggregated slices land on one reducer (the north rule's
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame, functions as F
 
 
@@ -21,9 +22,12 @@ def shuffle_hash(df: DataFrame) -> DataFrame:
 
     Without it, AQE re-BROADCASTS the multi-million-row vertex state every
     superstep (measured 2× superstep cost at 14M edges) — and a broadcast of
-    per-vertex state is impossible at 10^12 nodes. With the hint, the cached
-    edge table's ``HashPartitioning(src)`` is reused and only the small
-    (state) side shuffles."""
+    per-vertex state is impossible at 10^12 nodes. The hint only pins the
+    join strategy; whether a side is exchanged depends on the layout. In the
+    co-partitioned loops (PageRank/ArticleRank, WCC, sync label
+    propagation: edges via :func:`repartition_edges`, state hash-partitioned
+    on ``node_id`` with the same count, docs/SCALE_NOTES.md §35) neither
+    join side is exchanged; everywhere else both sides shuffle."""
     return df.hint("shuffle_hash")
 
 
@@ -61,12 +65,50 @@ def degree_stats(edges: DataFrame, key: str = "dst") -> dict:
     return {k: (float(v) if v is not None else 0.0) for k, v in row.asDict().items()}
 
 
-def repartition_edges(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Hash-partition the edge table by ``src`` — the engine's canonical
-    physical layout (SURVEY §4: persisted once, reused across supersteps)."""
-    if num_partitions is None:
-        num_partitions = edges.sparkSession.sparkContext.defaultParallelism
-    return edges.repartition(num_partitions, "src")
+def layout_partitions(spark, edge_bytes: int) -> int:
+    """Partition count N of a co-partitioned superstep layout.
+
+    AQE's own coalescing rule, applied once up front: one partition per
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize`` of edge
+    table (``edge_bytes``, the caller's ``operators/estimate.table_bytes``
+    of it), at least 1 and at most ``spark.sql.shuffle.partitions``.
+    A tiny graph gets N = 1, so its loop runs one task per stage instead of
+    a scheduling floor per empty partition; a graph of many MB gets the
+    session's partition count (docs/SCALE_NOTES.md §35)."""
+    min_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1MB"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(cap, -(-edge_bytes // min_bytes)))
+
+
+def repartition_edges(edges: DataFrame, num_partitions: int,
+                      key: str = "src") -> DataFrame:
+    """Hash-partition the edge table on its traversal key — ``src`` for the
+    push loops, ``dst`` for pull-style voting. Persisted by the caller, it
+    is the superstep loop's fixed physical layout: joined against a vertex
+    state hash-partitioned on ``node_id`` with the same count, the
+    ``senders ⋈ edges`` join needs no exchange (SURVEY §4)."""
+    return edges.repartition(num_partitions, key)
+
+
+def hash_layout(df: DataFrame) -> int | None:
+    """N when ``df`` ends in an explicit ``repartition(N, "node_id")`` — how an
+    operator hands a co-partitioned vertex state to the Pregel driver —
+    else None. Reads the analyzed plan; runs no job."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() != "RepartitionByExpression" \
+                or not plan.optNumPartitions().isDefined():
+            return None
+        exprs = plan.partitionExpressions()
+        if exprs.length() != 1:
+            return None
+        e = exprs.apply(0)
+        if e.getClass().getSimpleName() != "AttributeReference" or e.name() != "node_id":
+            return None
+        return int(plan.numPartitions())
+    except Py4JError:  # pragma: no cover - private-API shape changed
+        return None
 
 
 def bucketed_exclusive_prefix(

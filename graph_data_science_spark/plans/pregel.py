@@ -48,7 +48,20 @@ Spark-specific disciplines the reference doesn't need (SURVEY §4):
    ``_active`` column (int); the driver folds ``sum(_active)`` into the same
    action that materializes the state (no extra job) and stops at 0 — the
    analog of HugeAtomicBitSet vote bits + "no messages sent"
-   (pregel/.../PartitionedComputer.java:87-92).
+   (pregel/.../PartitionedComputer.java:87-92). The loop's start-up
+   truncation carries the same Observation (one in-memory job for a
+   layout-carrying loop, a parquet scratch write otherwise), and the size
+   gate reads its row count; a layout-carrying loop that the gate puts on
+   parquet truncation moves its start state to scratch too.
+
+4. **Co-partitioned layout.** An initial state ending in
+   ``repartition(N, "node_id")`` (the operator persisted its edge table
+   through ``plans/partitioning.repartition_edges`` with the same N) makes
+   the loop *layout-carrying*: every materializing action runs with AQE
+   off and ``spark.sql.shuffle.partitions = N``, and the in-memory
+   truncation keeps the state's partitioner, so a steady-state superstep
+   exchanges only its combined messages (docs/SCALE_NOTES.md §35). Each
+   metrics row records ``layout_partitions`` (N or None) and ``aqe_off``.
 """
 
 from __future__ import annotations
@@ -60,6 +73,8 @@ from dataclasses import dataclass, field
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from graph_data_science_spark.plans.partitioning import hash_layout
 
 ACTIVE_COL = "_active"
 
@@ -73,8 +88,10 @@ from contextlib import contextmanager
 
 
 @contextmanager
-def no_aqe(spark: SparkSession):
-    """Disable adaptive query execution for the queries run inside.
+def no_aqe(spark: SparkSession, shuffle_partitions: int | None = None):
+    """Disable adaptive query execution for the queries run inside — and,
+    with ``shuffle_partitions``, pin the exchange count to a co-partitioned
+    loop's N (module doc #4).
 
     Fused superstep blocks reference each sub-step's output 2-5× (join side
     + message branch). The static ``ReuseExchange`` rule dedupes those
@@ -87,15 +104,19 @@ def no_aqe(spark: SparkSession):
     superstep loop, so the loop's materializing queries run with AQE off
     and the session default stays on for everything else.
 
-    The flag is read per query execution, so toggling around the single
+    The flags are read per query execution, so toggling around the single
     materializing action is safe; restored in a ``finally``."""
-    key = "spark.sql.adaptive.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
+    conf = {"spark.sql.adaptive.enabled": "false"}
+    if shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    prev = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 class _SnapshotWriter:
@@ -225,11 +246,13 @@ class Pregel:
         # "memory": eager localCheckpoint + retire-previous — zero disk
         # I/O, wins BELOW the size gate where the ~0.3 s/superstep write
         # floor dominates (measured at sf0.1: pagerank ~2× faster).
-        # "auto" (default): the initial truncate is parquet (so step 0 is
-        # byte-identical to the big-scale path either way), then the loop
-        # picks memory below _AQE_OFF_MIN_ROWS state rows and parquet at or
-        # above it — the same gate that drives AQE/fusion, for the same
-        # reason: small state is floor-bound, large state is scan-bound.
+        # "auto" (default): the initial truncate observes the row count on
+        # the way — in memory for a layout-carrying loop (module doc #4), on
+        # parquet scratch otherwise, and on scratch whenever the loop itself
+        # will truncate on parquet — then the loop picks memory below
+        # _AQE_OFF_MIN_ROWS state rows and parquet at or above it — the
+        # same gate that drives AQE/fusion, for the same reason: small
+        # state is floor-bound, large state is scan-bound.
         # SPARK_GRAFT_TRUNCATION pins an explicit mode (the scale/probe
         # scripts and the A/B harness set it deliberately).
         if truncation is None:
@@ -240,6 +263,10 @@ class Pregel:
         self._tmp_dir: str | None = None
         self._slot = 0  # next scratch slot; alternates per truncation call
         self._prev_ckpt_rdd = None  # JVM RDD handle of the previous superstep
+        self._layout: int | None = None  # N of a co-partitioned loop (doc #4)
+        # AQE off (the scale-safe side) until the start-up job has measured
+        # the state row count; see _aqe_ctx
+        self._aqe_off = True
         self._writer = None  # in-flight async snapshot writer thread
         # per-partition lineage rows cost one extra tiny job per snapshot;
         # default on only when checkpointing is on
@@ -265,16 +292,21 @@ class Pregel:
         return self.spark.read.parquet(path)
 
     def _aqe_ctx(self):
-        """AQE toggle for the block-materializing action, SIZE-gated
+        """AQE toggle for the block-materializing action. A layout-carrying
+        loop (module doc #4) always runs with AQE off and N shuffle
+        partitions: under AQE the checkpoint loses the state's partitioner
+        and every superstep re-exchanges the state. Otherwise SIZE-gated
         (docs/SCALE_NOTES.md §11): fused chains over large state need AQE
         off so static ReuseExchange dedups the repeated sub-plan references
         (measured 2-3× at 2M+ nodes), but below ~1M state rows AQE's
         partition coalescing wins outright — at sf0.1 every 32-task stage
         is scheduling floor, and re-executed prefixes over 600k edges are
-        cheap. Defaults to OFF (the scale-safe side) until the first
-        aggregation of the run measures the state row count."""
+        cheap. Defaults to OFF (the scale-safe side) until the start-up job
+        of the run measures the state row count."""
         from contextlib import nullcontext
-        if getattr(self, "_aqe_off", True):
+        if self._layout is not None:
+            return no_aqe(self.spark, self._layout)
+        if self._aqe_off:
             return no_aqe(self.spark)
         return nullcontext()
 
@@ -464,6 +496,11 @@ class Pregel:
         self.metrics_so_far = metrics
         start_step = 0
         state = initial_state
+        # read before a resumed snapshot replaces the state: the snapshot
+        # arrives unpartitioned, and its first superstep re-exchanges it
+        # onto the layout
+        self._layout = hash_layout(initial_state)
+        self._aqe_off = True
         if self.checkpoint_dir:
             if resume:
                 self._validate_manifest()
@@ -475,24 +512,32 @@ class Pregel:
             if resumed is not None:
                 state, start_step = resumed
                 self._prune_above(start_step - 1)
+        from pyspark.sql import Observation
+
         # truncate the incoming plan too — step 0 should start from a flat
-        # scan. "auto" starts on scratch (byte-identical to the big-scale
-        # path) and picks the loop mode once rows0 is known below.
-        state_on_scratch = False
-        if self.truncation == "memory":
+        # scan. The truncation materializes the state and observes its
+        # active/row counts on the way (module doc #3). "auto" starts a
+        # layout-carrying loop in memory (a parquet re-read would drop the
+        # partitioner) and every other loop on parquet scratch, whose rescan
+        # is the fast one at or above the size gate (see __init__).
+        obs = Observation("superstep_start")
+        state = state.observe(
+            obs, F.sum(F.col(ACTIVE_COL).cast("long")).alias("a"),
+            F.count(F.lit(1)).alias("r"))
+        state_on_scratch = self.truncation == "parquet" or (
+            self.truncation == "auto" and self._layout is None)
+        if state_on_scratch:
+            state = self._scratch_truncate(state, -1)
+        else:
             state, rdd0 = self._mem_truncate(state)
             self._retire_prev(rdd0)
-        else:
-            state = self._scratch_truncate(state, -1)
-            state_on_scratch = True
-        first = state.agg(
-            F.sum(F.col(ACTIVE_COL).cast("long")).alias("a"),
-            F.count(F.lit(1)).alias("r")).first()
+        first = obs.get
         active = first["a"] or 0
         # size gate for _aqe_ctx, fusion AND auto-truncation (state rows
-        # ride the agg we already run): below the threshold AQE stays on,
+        # ride the start-up job): below the threshold AQE stays on,
         # fusion stays off, and truncation goes in-memory — as a package —
-        # see the __init__ fuse/truncation comments
+        # see the __init__ fuse/truncation comments. A layout-carrying loop
+        # keeps AQE off at every size (_aqe_ctx).
         rows0 = int(first["r"] or 0)
         self._aqe_off = rows0 >= _AQE_OFF_MIN_ROWS
         fuse_eff = self.fuse if (self._fuse_explicit
@@ -501,9 +546,15 @@ class Pregel:
             trunc_eff = "parquet" if rows0 >= _AQE_OFF_MIN_ROWS else "memory"
         else:
             trunc_eff = self.truncation
+        if trunc_eff == "parquet" and not state_on_scratch:
+            # a layout-carrying loop at or above the gate starts on scratch
+            # like every later block: a fused first block reading the
+            # in-memory start-up checkpoint measured 1.7× the same block
+            # reading parquet (PageRank, 1.05M nodes; SCALE_NOTES §35)
+            state = self._scratch_truncate(state, -1)
+            self._retire_prev(None)
+            state_on_scratch = True
         converged = active == 0
-
-        from pyspark.sql import Observation
 
         superstep = start_step
         while not converged and superstep < self.max_iterations:
@@ -532,6 +583,7 @@ class Pregel:
             do_snapshot = self.checkpoint_dir and (block_end + 1) % self.snapshot_interval == 0
             new_rdd = None
             snap_id = None
+            aqe_off = self._layout is not None or self._aqe_off
             if trunc_eff == "memory":
                 # critical path: in-memory materialization only; any snapshot
                 # write overlaps the NEXT superstep (module doc #2)
@@ -571,6 +623,9 @@ class Pregel:
                 "superstep": block_end,
                 "fused": block,
                 "wall_ms": round(wall_ms, 3),
+                # the posture this block ran under
+                "layout_partitions": self._layout,
+                "aqe_off": aqe_off,
                 "active": int(active),
                 "rows": int(row.pop("rows")),
                 **{k: (float(v) if v is not None else None) for k, v in row.items()},

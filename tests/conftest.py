@@ -25,5 +25,21 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def spark_conf(spark):
+    """``spark_conf({"spark.sql.shuffle.partitions": "4", ...})`` sets session
+    confs for one test; the previous values come back after it."""
+    prev = {}
+
+    def set_conf(kv):
+        for k, v in kv.items():
+            prev.setdefault(k, spark.conf.get(k))
+            spark.conf.set(k, v)
+
+    yield set_conf
+    for k, v in prev.items():
+        spark.conf.set(k, v)
+
+
 def rows_to_dict(df, key, value):
     return {r[key]: r[value] for r in df.collect()}

@@ -78,3 +78,12 @@ F5_EXPECTED_LCC = {
     2: 1.0, 5: 1.0, 3: 0.6666666666666666, 4: 0.6666666666666666,
     1: 0.3, 0: 0.0,
 }
+
+
+# ---- co-partitioned layout at N > 1 (plans/partitioning.layout_partitions) ----
+#: session confs (set through the conftest ``spark_conf`` fixture) under
+#: which the tiny fixtures get a layout of LAYOUT_N partitions: one
+#: partition per 16 bytes of edge table, capped at LAYOUT_N
+LAYOUT_N = 4
+LAYOUT_CONF = {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "16b",
+               "spark.sql.shuffle.partitions": str(LAYOUT_N)}

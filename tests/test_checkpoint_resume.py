@@ -12,7 +12,7 @@ import pytest
 from graph_data_science_spark.graph import Graph, edges_from_tuples
 from graph_data_science_spark.operators.pagerank import pagerank
 from graph_data_science_spark.operators.wcc import wcc
-from tests.fixtures import F1_EDGES, F1_NODES
+from tests.fixtures import F1_EDGES, F1_NODES, LAYOUT_CONF, LAYOUT_N
 
 
 @pytest.fixture()
@@ -36,6 +36,8 @@ def test_pagerank_resume_equals_uninterrupted(f1_graph, tmp_path):
     # resume from the latest snapshot and continue to the same cap
     resumed = pagerank(f1_graph, tolerance=0.0, max_iterations=15,
                        checkpoint_dir=ckpt, resume=True)
+    # the tiny fixture runs the co-partitioned loop at N = 1
+    assert {m["layout_partitions"] for m in resumed.metrics} == {1}
     got = _scores(resumed)
     assert got == full  # bit-for-bit: same floats
     # resumed run executed only the remaining supersteps
@@ -68,6 +70,44 @@ def test_wcc_resume(spark, tmp_path):
     ckpt = str(tmp_path / "wcc")
     wcc(g, max_iterations=4, checkpoint_dir=ckpt)
     resumed = wcc(g, checkpoint_dir=ckpt, resume=True)
+    assert {m["layout_partitions"] for m in resumed.metrics} == {1}
     got = {r["node_id"]: r["component"] for r in resumed.components.collect()}
     assert got == full
     assert all(v == 0 for v in got.values())
+
+
+# ---- resume at N > 1 -----------------------------------------------------------
+# A resumed snapshot arrives unpartitioned: its first superstep re-exchanges
+# the state onto the co-partitioned layout. The tests above run at N = 1;
+# under LAYOUT_CONF the same fixtures run at N = LAYOUT_N, and the resumed
+# result is still the uninterrupted one, bit for bit.
+
+def test_pagerank_resume_bit_identical_at_n_partitions(f1_graph, spark_conf, tmp_path):
+    spark_conf(LAYOUT_CONF)
+    whole = pagerank(f1_graph, tolerance=0.0, max_iterations=12)
+    ckpt = str(tmp_path / "pr")
+    pagerank(f1_graph, tolerance=0.0, max_iterations=4, checkpoint_dir=ckpt)
+    resumed = pagerank(f1_graph, tolerance=0.0, max_iterations=12,
+                       checkpoint_dir=ckpt, resume=True)
+    for res in (whole, resumed):
+        assert {m["layout_partitions"] for m in res.metrics} == {LAYOUT_N}
+    assert resumed.ran_iterations < 12
+    assert _scores(resumed) == _scores(whole)
+
+
+def test_wcc_resume_bit_identical_at_n_partitions(spark, spark_conf, tmp_path):
+    spark_conf(LAYOUT_CONF)
+    # two chains and isolated nodes: several components, many supersteps
+    chain = [(i, i + 1) for i in range(14)] + [(i, i + 1) for i in range(20, 33)]
+    g = Graph(nodes=spark.createDataFrame([(i,) for i in range(40)], "node_id long"),
+              edges=edges_from_tuples(spark, chain))
+    whole = wcc(g)
+    ckpt = str(tmp_path / "wcc")
+    wcc(g, max_iterations=5, checkpoint_dir=ckpt)
+    resumed = wcc(g, checkpoint_dir=ckpt, resume=True)
+    for res in (whole, resumed):
+        assert {m["layout_partitions"] for m in res.metrics} == {LAYOUT_N}
+    got = {r["node_id"]: r["component"] for r in resumed.components.collect()}
+    assert got == {r["node_id"]: r["component"]
+                   for r in whole.components.collect()}
+    assert set(got.values()) == {0, 20} | set(range(15, 20)) | set(range(34, 40))
